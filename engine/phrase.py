@@ -45,12 +45,13 @@ from pyspark.sql import types as T
 from engine.analyzer import extract_series, tokenize, tokenize_series
 from engine.build import IndexHandle, open_index
 from engine.query import (
-    LOCAL_MAX_POSTINGS,
     SCORE_SCHEMA,
     _brute_scorer,
     _docs_df,
+    _fits_driver,
     _local_term_stats,
     _pruned_postings,
+    _result_df,
     local_scored_arrays,
     term_stats,
 )
@@ -64,18 +65,14 @@ _VERIFY_SCHEMA = T.StructType([T.StructField("url", T.StringType())])
 _PREFIX_CAP = 4096
 
 
-def _local_topk_df(spark, rows, out_schema):
-    """Collected top-k rows → local DataFrame preserving row order."""
-    pdf = pd.DataFrame(
-        {
-            "doc_id": pd.Series([int(r["doc_id"]) for r in rows], dtype="int64"),
-            "url": [r["url"] for r in rows],
-            "score": pd.Series(
-                [float(r["score"]) for r in rows], dtype="float64"
-            ),
-        }
+def _rows_df(spark, rows):
+    """Collected (doc_id, url, score) rows → result frame, row order kept."""
+    return _result_df(
+        spark,
+        [int(r["doc_id"]) for r in rows],
+        [r["url"] for r in rows],
+        [float(r["score"]) for r in rows],
     )
-    return spark.createDataFrame(pdf, out_schema)
 
 
 def _phrase_verifier(phrase_tokens: list[str]):
@@ -115,7 +112,7 @@ def scored_docs(
     live = [t for t in terms if t in st]
     if (conjunctive and len(live) < len(terms)) or not live:
         return spark.createDataFrame([], "doc_id long, score double")
-    if local_ok and sum(st[t]["df"] for t in live) <= LOCAL_MAX_POSTINGS:
+    if local_ok and _fits_driver(st, live):
         # driver-local fast path (same auto-mode crossover as query_topk):
         # when the terms' postings fit the local budget, the pyarrow-pruned
         # read + numpy kernel produces all candidate scores in ~0.1 s with
@@ -211,9 +208,7 @@ def filtered_topk(
         rows = resolve.limit(max_filter_ids + 1).collect()
         if len(rows) <= max_filter_ids:
             if not rows:
-                return spark.createDataFrame(
-                    [], "doc_id long, url string, score double"
-                )
+                return _result_df(spark, [], [], [])
             allowed = np.asarray(
                 sorted(int(r["doc_id"]) for r in rows), dtype=np.int64
             )
@@ -258,15 +253,8 @@ def phrase_topk(
     Returns (doc_id, url, score) ordered by (score desc, url asc)."""
     handle = open_index(index) if isinstance(index, str) else index
     ordered = tokenize(phrase)
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("url", T.StringType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
     if not ordered:
-        return spark.createDataFrame([], out_schema)
+        return _result_df(spark, [], [], [])
     uniq = list(dict.fromkeys(ordered))
     cand = conjunctive_scored(spark, handle, uniq)
     docs = _docs_df(spark, handle).select("doc_id", "url")
@@ -312,7 +300,7 @@ def phrase_topk(
             )
             new = prefix[checked:]
             if not new:  # candidate list exhausted — done, however many
-                return _local_topk_df(spark, verified_rows[:k], out_schema)
+                return _rows_df(spark, verified_rows[:k])
             urls = [r["url"] for r in new]
             ok = {
                 r["url"]
@@ -329,7 +317,7 @@ def phrase_topk(
             }
             verified_rows.extend(r for r in new if r["url"] in ok)
             if len(verified_rows) >= k:
-                return _local_topk_df(spark, verified_rows[:k], out_schema)
+                return _rows_df(spark, verified_rows[:k])
             checked = len(prefix)
             batch *= 4
         # fallback: full verification of the remaining candidate set (the
@@ -346,7 +334,7 @@ def phrase_topk(
             .limit(k)
             .collect()
         )
-        return _local_topk_df(spark, rows, out_schema)
+        return _rows_df(spark, rows)
     finally:
         # every return above is a collected local relation, so the cache
         # can be dropped before returning — no persist leak per query

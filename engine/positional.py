@@ -29,14 +29,19 @@ Hot terms (df >= hot_threshold, same rule as the main build) are salted by
 doc range BEFORE the term shuffle; since positional rows are per (term,
 doc) the salt is a pure column computation (no decode/re-encode pass).
 
-Query plan (`phrase_match_docs`): bucket-partition-pruned scan of the
-phrase terms' blocks → doc-range shards exactly like block-max WAND
-(blocks spanning several shards are replicated, scoring clipped to the
-home shard) → per-shard vectorized adjacency chain on (doc, pos) keys →
-matched doc_ids. `phrase_topk_positional` then reuses the exact BM25
-scoring path of engine.phrase (rank-identical by construction: same
+Query plan (`phrase_match_docs`): the phrase terms' blocks, pruned to
+their term buckets, go through the same shard runner as block-max WAND
+(engine.query.ShardRunner) → vectorized adjacency chain on (doc, pos) keys
+→ matched doc_ids. A phrase whose postings fit one shard runs its shard on
+the driver (pyarrow read, kernel in-process, no Spark job); heavier
+phrases fan out to doc-range shards through `groupBy("shard")
+.applyInPandas` (blocks spanning several shards are replicated, matching
+clipped to the home shard). `phrase_topk_positional` then reuses the exact
+BM25 scoring path of engine.phrase (rank-identical by construction: same
 scores, and the positional match set equals the verification match set —
-property-tested in tests/test_positional.py).
+property-tested in tests/test_positional.py); when the candidate scores
+and the match ids are both on the driver it masks and ranks there too,
+so a light phrase query launches zero Spark jobs.
 
 Scale notes (100 TB): the build is one tokenize pass + one term shuffle of
 varint-packed per-(term,doc) rows (~1-2 B/position in transit); the query
@@ -66,7 +71,18 @@ from engine.codec import (
     varint_decode_concat,
     varint_encode_rows,
 )
-from engine.query import _local_term_stats, _wand_n_groups, term_stats
+from engine.query import (
+    ShardRunner,
+    _docs_df,
+    _fits_driver,
+    _forget,
+    _local_term_stats,
+    _result_df,
+    _url_ranked_topk,
+    _wand_n_groups,
+    local_scored_arrays,
+    term_stats,
+)
 
 POS_PARTIAL_SCHEMA = T.StructType(
     [
@@ -261,8 +277,6 @@ def build_positions(
     range_size = int(handle.stats["range_size"])
     hot_thr = int(handle.stats["hot_threshold"])
 
-    from engine.query import _docs_df
-
     docs = _docs_df(spark, handle).select("doc_id", "url")
     cols = ["url", "text"]
     if "html" in corpus.columns:
@@ -337,6 +351,9 @@ def build_positions(
             },
             f,
         )
+    # the overwrite replaced every file under out_dir: the handle's memoized
+    # scans of it hold the old file listing (engine.query._pa_dataset)
+    _forget(handle, out_dir)
     return out_dir
 
 
@@ -412,6 +429,28 @@ def _adjacency_kernel(ordered_terms: list[str], range_size: int):
     return fn
 
 
+def _match_docs(
+    spark: SparkSession,
+    handle: IndexHandle,
+    positions_dir: str,
+    ordered_terms: list[str],
+    st: dict,
+    shard_target: int | None = None,
+) -> pd.DataFrame | DataFrame:
+    """The adjacency kernel through the shared ShardRunner: a pandas frame
+    of matched doc_ids when the phrase fits one shard (scored on the
+    driver), else the lazy sharded Spark plan. Every phrase term must be
+    in `st`."""
+    uniq = list(dict.fromkeys(ordered_terms))
+    runner = ShardRunner(
+        spark, handle, positions_dir, POS_BLOCK_SCHEMA, uniq,
+        _wand_n_groups(handle, st, uniq, shard_target),
+    )
+    return runner.run(
+        _adjacency_kernel(ordered_terms, runner.width), MATCH_SCHEMA
+    )
+
+
 def phrase_match_docs(
     spark: SparkSession,
     index: IndexHandle | str,
@@ -422,10 +461,11 @@ def phrase_match_docs(
     """doc_ids whose token stream contains `ordered_terms` consecutively,
     answered from the positional artifact alone (no corpus access).
 
-    Physical plan mirrors the WAND query path: bucket-partition-pruned scan
-    of the phrase terms' blocks, adaptive doc-range sharding (1 task for
-    light phrases, fan-out for stopword-grade ones, blocks replicated to
-    every shard they span and clipped in the kernel)."""
+    Physical plan mirrors the WAND query path (engine.query.ShardRunner):
+    the phrase terms' blocks, pruned to their term buckets, are matched on
+    the driver when they fit one shard, and otherwise fan out to doc-range
+    shards (blocks replicated to every shard they span and clipped in the
+    kernel)."""
     handle = open_index(index) if isinstance(index, str) else index
     uniq = list(dict.fromkeys(ordered_terms))
     if not uniq:
@@ -436,51 +476,11 @@ def phrase_match_docs(
         st = term_stats(spark, handle, uniq)
     if any(t not in st for t in uniq):
         return spark.createDataFrame([], MATCH_SCHEMA)
-    n_buckets = int(handle.stats["n_term_buckets"])
-    buckets = sorted(
-        {zlib.crc32(t.encode("utf-8")) % n_buckets for t in uniq}
+    out = _match_docs(spark, handle, positions_dir, ordered_terms, st,
+                      shard_target)
+    return out if isinstance(out, DataFrame) else spark.createDataFrame(
+        out, MATCH_SCHEMA
     )
-    # memoized base scan with explicit schema (skips footer inference and
-    # directory re-listing per query; lazy plan only, data read per query)
-    pos_cache = handle.__dict__.setdefault("_pos_df_cache", {})
-    base = pos_cache.get(positions_dir)
-    if base is None:
-        base = spark.read.schema(POS_BLOCK_SCHEMA).parquet(positions_dir)
-        pos_cache[positions_dir] = base
-    blocks = (
-        base.filter(F.col("bucket").isin(buckets))
-        .filter(F.col("term").isin(uniq))
-    )
-    range_size = int(handle.stats["range_size"])
-    n_ranges = int(handle.stats.get("n_doc_ranges", 32))
-    n_groups = _wand_n_groups(handle, st, uniq, shard_target)
-    width = range_size * (-(-n_ranges // n_groups))
-    if n_groups == 1:
-        kernel = _adjacency_kernel(ordered_terms, 1 << 62)
-
-        def _single(batches):
-            pdfs = [p for p in batches if len(p)]
-            if pdfs:
-                out = kernel(pd.concat(pdfs, ignore_index=True))
-                if len(out):
-                    yield out
-
-        return (
-            blocks.withColumn("shard", F.lit(0).cast("long"))
-            .coalesce(1)
-            .mapInPandas(_single, MATCH_SCHEMA)
-        )
-    kernel = _adjacency_kernel(ordered_terms, width)
-    shard = blocks.withColumn(
-        "shard",
-        F.explode(
-            F.sequence(
-                (F.col("first_doc_id") / width).cast("long"),
-                (F.col("last_doc_id") / width).cast("long"),
-            )
-        ),
-    )
-    return shard.groupBy("shard").applyInPandas(kernel, MATCH_SCHEMA)
 
 
 def phrase_topk_positional(
@@ -494,21 +494,45 @@ def phrase_topk_positional(
     engine.phrase.phrase_topk (same conjunctive BM25 scores over the
     phrase's unique terms, same (score desc, url asc) order), but adjacency
     is verified from index blocks — query cost is O(phrase terms' position
-    blocks), independent of corpus text volume."""
+    blocks), independent of corpus text volume.
+
+    Finishes on the driver, with zero Spark jobs, when both inputs are
+    there: the conjunctive candidate scores (local postings kernel, under
+    the same auto-mode crossover as engine.phrase.scored_docs) and the
+    match ids (a phrase that fits one shard). Otherwise the Spark plan
+    runs: candidate scores semi-joined to the match ids, url join, sort."""
     from engine.phrase import conjunctive_scored
 
     handle = open_index(index) if isinstance(index, str) else index
     ordered = tokenize(phrase)
-    out_schema = "doc_id long, url string, score double"
     if not ordered:
-        return spark.createDataFrame([], out_schema)
+        return _result_df(spark, [], [], [])
     uniq = list(dict.fromkeys(ordered))
+    try:
+        st = _local_term_stats(handle, uniq)
+        local_ok = True
+    except Exception:  # non-local index store: Spark reads below
+        st = term_stats(spark, handle, uniq)
+        local_ok = False
+    if any(t not in st for t in uniq):
+        return _result_df(spark, [], [], [])
+    matched = (
+        _match_docs(spark, handle, positions_dir, ordered, st)
+        if len(ordered) > 1 else None
+    )
+    if (local_ok and not isinstance(matched, DataFrame)
+            and _fits_driver(st, uniq)):
+        ids, scores = local_scored_arrays(handle, uniq, st, conjunctive=True)
+        if matched is not None:
+            keep = np.isin(ids, matched["doc_id"].to_numpy(np.int64))
+            ids, scores = ids[keep], scores[keep]
+        top = _url_ranked_topk(spark, handle, ids, scores, k)
+        return _result_df(spark, *top)
     cand = conjunctive_scored(spark, handle, uniq)
-    if len(ordered) > 1:
-        matched = phrase_match_docs(spark, handle, positions_dir, ordered)
+    if matched is not None:
+        if not isinstance(matched, DataFrame):
+            matched = spark.createDataFrame(matched, MATCH_SCHEMA)
         cand = cand.join(matched, "doc_id", "left_semi")
-    from engine.query import _docs_df
-
     docs = _docs_df(spark, handle).select("doc_id", "url")
     return (
         cand.join(docs, "doc_id")

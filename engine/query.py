@@ -12,8 +12,12 @@ Two physical strategies, rank-identical by construction (property-tested):
   descending upper-bound order, stopping when the next interval's bound
   can't beat the shard's kth score. Only provably-dominated blocks are
   skipped, so results are rank-identical to brute force (§2.B14 exactness
-  guard). Local top-k per shard, then a global TakeOrdered over ≤ shards·k
-  rows.
+  guard). Local top-k per shard, then a global top-k over ≤ shards·k
+  rows. One ShardRunner executes every shard: a query whose postings fit
+  one shard (the `_wand_n_groups` formula) runs its shard on the driver —
+  a pyarrow read of the pruned blocks and the same kernel in-process, zero
+  Spark jobs — and fans out through `groupBy("shard").applyInPandas`
+  otherwise (or when the store is not pyarrow-readable).
 
 Both paths prune the postings scan to the query terms' hash buckets
 (partition pruning on the `bucket=` directory column) and push `term IN`
@@ -36,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from engine.analyzer import tokenize
-from engine.build import IndexHandle, open_index
+from engine.build import POSTINGS_SCHEMA, IndexHandle, open_index
 from engine.codec import (
     bm25_tf_norm,
     decode,
@@ -66,6 +70,15 @@ TOPK_SCHEMA = T.StructType(
     ]
 )
 
+# every top-k entry point returns this frame, in rank order
+RESULT_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("url", T.StringType()),
+        T.StructField("score", T.DoubleType()),
+    ]
+)
+
 
 # postings per WAND shard task (~10 ms kernel time); module-level so tests
 # can shrink it to force the multi-shard path on tiny corpora
@@ -81,33 +94,56 @@ def parse_query(query: str) -> list[str]:
     return list(seen)
 
 
-def _postings_df(spark: SparkSession, handle: IndexHandle) -> DataFrame:
-    """Base postings scan, built once per handle: the explicit schema skips
-    footer-based inference and the memoized plan skips re-listing the bucket
-    directories on every query (~0.1 s/query of driver-only work measured at
-    sf1.0). This memoizes a LAZY plan, never data — every execution still
-    reads the parquet files."""
-    df = handle.__dict__.get("_postings_df")
+def _spark_scan(
+    spark: SparkSession, handle: IndexHandle, path: str, schema=None
+) -> DataFrame:
+    """Parquet scan of one of the handle's tables, built once per (handle,
+    path): an explicit schema skips footer-based inference and the memoized
+    plan skips re-listing the directory on every query (~0.1 s/query of
+    driver-only work measured at sf1.0). This memoizes a LAZY plan, never
+    data — every execution still reads the parquet files. Same layout
+    precondition as _pa_dataset."""
+    scans = handle.__dict__.setdefault("_spark_scans", {})
+    df = scans.get(path)
     if df is None:
-        from engine.build import POSTINGS_SCHEMA
-
-        df = spark.read.schema(POSTINGS_SCHEMA).parquet(handle.postings_path)
-        handle.__dict__["_postings_df"] = df
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        df = scans[path] = reader.parquet(path)
     return df
 
 
-def _pa_dataset(handle: IndexHandle, key: str, path: str, partitioning=None):
-    """Driver-side pyarrow dataset for an index table, memoized per handle —
-    skips re-listing the directory on every query. Lazy metadata only; data
-    is read per query."""
-    dset = handle.__dict__.get(key)
+def _docs_df(spark: SparkSession, handle: IndexHandle) -> DataFrame:
+    return _spark_scan(spark, handle, handle.docs_path)
+
+
+def _pa_dataset(handle: IndexHandle, path: str, partitioning=None):
+    """Driver-side pyarrow dataset for one of the handle's tables, memoized
+    per (handle, path) — skips re-listing the directory on every query.
+    Lazy metadata only; data is read per query. Non-parquet sidecars (the
+    positions artifact's positions_meta.json) are skipped by name.
+
+    Precondition (versioned layout): the file listing is held for the
+    handle's lifetime, so a handle's files are never overwritten in place —
+    build_index publishes every build into a fresh version directory — and
+    any writer into a handle's directory drops the handle's memo entries
+    for what it wrote with _forget. engine.positional.build_positions is
+    the one such writer."""
+    dsets = handle.__dict__.setdefault("_pa_datasets", {})
+    dset = dsets.get(path)
     if dset is None:
         import pyarrow.dataset as ds
 
-        kw = {"partitioning": partitioning} if partitioning else {}
-        dset = ds.dataset(path, format="parquet", **kw)
-        handle.__dict__[key] = dset
+        dset = dsets[path] = ds.dataset(
+            path, format="parquet", partitioning=partitioning,
+            ignore_prefixes=[".", "_", "positions_meta"],
+        )
     return dset
+
+
+def _forget(handle: IndexHandle, path: str) -> None:
+    """Drop the handle's memoized Spark scan and pyarrow dataset of `path`,
+    whose file listings a rewrite of `path` made stale."""
+    for memo in ("_spark_scans", "_pa_datasets"):
+        handle.__dict__.get(memo, {}).pop(path, None)
 
 
 def _pa_field(name: str):
@@ -116,26 +152,47 @@ def _pa_field(name: str):
     return ds.field(name)
 
 
-def _docs_df(spark: SparkSession, handle: IndexHandle) -> DataFrame:
-    """Docs table scan, plan memoized per handle (same rationale as
-    _postings_df)."""
-    df = handle.__dict__.get("_docs_df")
-    if df is None:
-        df = spark.read.parquet(handle.docs_path)
-        handle.__dict__["_docs_df"] = df
-    return df
+def _term_buckets(handle: IndexHandle, terms: list[str]) -> list[int]:
+    """The on-disk `bucket=` partitions holding `terms` (postings and
+    positions share the crc32 term → bucket rule)."""
+    n = handle.stats["n_term_buckets"]
+    return sorted({zlib.crc32(t.encode("utf-8")) % n for t in terms})
+
+
+def _pruned_scan(
+    spark: SparkSession, handle: IndexHandle, path: str, schema,
+    terms: list[str],
+) -> DataFrame:
+    """The terms' blocks of a bucket-partitioned table (postings or
+    positions): partition pruning on `bucket=`, then `term IN` pushed down
+    to the term-sorted parquet row groups."""
+    return (
+        _spark_scan(spark, handle, path, schema)
+        .filter(F.col("bucket").isin(_term_buckets(handle, terms)))
+        .filter(F.col("term").isin(terms))
+    )
 
 
 def _pruned_postings(
     spark: SparkSession, handle: IndexHandle, terms: list[str]
 ) -> DataFrame:
-    buckets = sorted(
-        {zlib.crc32(t.encode("utf-8")) % handle.stats["n_term_buckets"] for t in terms}
+    return _pruned_scan(
+        spark, handle, handle.postings_path, POSTINGS_SCHEMA, terms
     )
-    return (
-        _postings_df(spark, handle)
-        .filter(F.col("bucket").isin(buckets))
-        .filter(F.col("term").isin(terms))
+
+
+def _local_blocks(
+    handle: IndexHandle, path: str, terms: list[str], columns: list[str]
+):
+    """Driver-side twin of _pruned_scan: the same bucket-partition and
+    `term IN` row-group pruning, read with pyarrow (no Spark job). Returns
+    a pyarrow Table; raises on a store pyarrow cannot read."""
+    import pyarrow.dataset as ds
+
+    return _pa_dataset(handle, path, partitioning="hive").to_table(
+        columns=columns,
+        filter=ds.field("bucket").isin(_term_buckets(handle, terms))
+        & ds.field("term").isin(terms),
     )
 
 
@@ -222,8 +279,8 @@ def _wand_shard_scorer(stats: dict, k1: float, b: float, avgdl: float, k: int,
     corpus-level stats (ES filter-context semantics).
 
     A block overlapping several doc-range shards is replicated to each (the
-    explode in query_topk), so every shard sees every block covering its own
-    doc range — scoring is therefore clipped to [shard*range_size,
+    explode in ShardRunner), so every shard sees every block covering its
+    own doc range — scoring is therefore clipped to [shard*range_size,
     (shard+1)*range_size): each doc is scored exactly once, in its home
     shard, with all its covering blocks present (full scores). Without the
     clip a spanning cold-term block would be scored in every shard it was
@@ -411,6 +468,72 @@ def _wand_shard_scorer(stats: dict, k1: float, b: float, avgdl: float, k: int,
     return fn
 
 
+class ShardRunner:
+    """The one shard runner behind every block kernel: block-max WAND (heap
+    and floor mode) and positional phrase adjacency. A kernel maps one
+    shard's blocks (a pandas frame with a `shard` column) to a frame.
+
+    - One shard (`n_groups == 1`, the `_wand_n_groups` formula): the
+      terms' blocks are read on the driver through the handle's memoized
+      pyarrow dataset (bucket partitions, then `term IN` row groups) and
+      the kernel runs in-process over one unbounded shard — zero Spark
+      jobs. The range is unbounded because doc ids may exceed range_size ×
+      n_doc_ranges when the id buckets are skewed, and nothing may be
+      clipped away. A second kernel (the url-tie floor rescan) reuses the
+      blocks already read.
+    - Otherwise (several shards, or a store pyarrow cannot read) the pruned
+      Spark scan fans out by `groupBy("shard").applyInPandas`: a block
+      overlapping several doc-range shards of `width` docs is replicated to
+      each, and the kernel clips to its home shard, so the plan is exact
+      for any width."""
+
+    def __init__(
+        self, spark: SparkSession, handle: IndexHandle, path: str,
+        table_schema, terms: list[str], n_groups: int,
+    ):
+        self.blocks = None  # the driver-held blocks of the one-shard case
+        if n_groups == 1:
+            import pyarrow as pa
+
+            cols = [f.name for f in table_schema.fields if f.name != "bucket"]
+            try:
+                tbl = _local_blocks(handle, path, terms, cols)
+            except (OSError, pa.ArrowException):
+                pass  # not pyarrow-readable: the Spark plan below
+            else:
+                self.blocks = tbl.to_pandas().assign(shard=0)
+                self.width = 1 << 62
+                return
+        n_ranges = handle.stats.get("n_doc_ranges", 32)
+        self.width = handle.stats["range_size"] * (-(-n_ranges // n_groups))
+        # the shuffle payload is <= blocks x spanned shards rows
+        pruned = _pruned_scan(spark, handle, path, table_schema, terms)
+        self._sharded = pruned.withColumn(
+            "shard",
+            F.explode(
+                F.sequence(
+                    (F.col("first_doc_id") / self.width).cast("long"),
+                    (F.col("last_doc_id") / self.width).cast("long"),
+                )
+            ),
+        )
+
+    def run(self, kernel, out_schema) -> pd.DataFrame | DataFrame:
+        """The kernel's output: a pandas frame on the driver, else the lazy
+        grouped-map plan."""
+        if self.blocks is None:
+            return self._sharded.groupBy("shard").applyInPandas(
+                kernel, out_schema
+            )
+        if len(self.blocks) == 0:
+            return pd.DataFrame(columns=out_schema.fieldNames())
+        return kernel(self.blocks)
+
+    def collect(self, kernel, out_schema) -> pd.DataFrame:
+        out = self.run(kernel, out_schema)
+        return out if isinstance(out, pd.DataFrame) else out.toPandas()
+
+
 def _resolve_urls(
     spark: SparkSession, handle: IndexHandle, ids: list[int]
 ) -> dict[int, str]:
@@ -419,7 +542,7 @@ def _resolve_urls(
     if not ids:
         return {}
     try:
-        dt = _pa_dataset(handle, "_docs_ds", handle.docs_path).to_table(
+        dt = _pa_dataset(handle, handle.docs_path).to_table(
             columns=["doc_id", "url"],
             filter=_pa_field("doc_id").isin(ids),
         )
@@ -432,6 +555,54 @@ def _resolve_urls(
             .select("doc_id", "url")
             .collect()
         }
+
+
+def _url_ranked_topk(
+    spark: SparkSession, handle: IndexHandle, ids, scores, k: int
+) -> tuple[list[int], list[str], list[float]]:
+    """Exact (score desc, url asc) top-k over candidate scores held on the
+    driver: keep every doc scoring above the kth score plus the ENTIRE
+    kth-score tie group (ties are exact float equalities — all scores come
+    from the same kernel), resolve urls for just that set, re-sort. No
+    heuristic margin. Returns (doc_ids, urls, scores) in rank order."""
+    ids = np.asarray(ids, dtype=np.int64)
+    scores = np.asarray(scores, dtype=np.float64)
+    if len(scores) > k > 0:
+        s_k = -np.partition(-scores, k - 1)[k - 1]
+        sel = scores >= s_k
+        ids, scores = ids[sel], scores[sel]
+    urls = _resolve_urls(spark, handle, ids.tolist())
+    ranked = sorted(
+        zip(scores.tolist(), [urls.get(d) for d in ids.tolist()], ids.tolist()),
+        key=lambda x: (-x[0], x[1]),
+    )[:k]
+    return (
+        [d for _, _, d in ranked],
+        [u for _, u, _ in ranked],
+        [s for s, _, _ in ranked],
+    )
+
+
+def _result_df(
+    spark: SparkSession, ids, urls, scores, with_url: bool = True
+) -> DataFrame:
+    """Driver-held top-k rows → (doc_id, url, score) DataFrame in rank order
+    (pandas→Arrow createDataFrame is ~10x cheaper than the row-list path,
+    and collects as a local relation, without a Spark job)."""
+    if len(ids) == 0:
+        # an empty input takes Spark's RDD path (a job on every collect);
+        # one placeholder row cut by limit(0) optimizes to an empty local
+        # relation, which collects without a job
+        return _result_df(spark, [0], [None], [0.0], with_url).limit(0)
+    pdf = pd.DataFrame(
+        {
+            "doc_id": pd.Series(ids, dtype="int64"),
+            "url": pd.Series(urls, dtype=object),
+            "score": pd.Series(scores, dtype="float64"),
+        }
+    )
+    df = spark.createDataFrame(pdf, RESULT_SCHEMA)
+    return df if with_url else df.drop("url")
 
 
 def query_topk(
@@ -471,13 +642,13 @@ def query_topk(
             st_local = _local_term_stats(handle, terms)
         except Exception:
             st_local = None
-        if st_local is not None:
-            total = sum(v["df"] for v in st_local.values())
-            if mode == "local" or total <= LOCAL_MAX_POSTINGS:
-                return query_topk_local(
-                    spark, handle, query, k=k, conjunctive=conjunctive,
-                    with_url=with_url, stats=st_local, tiebreak=tiebreak,
-                )
+        if st_local is not None and (
+            mode == "local" or _fits_driver(st_local, terms)
+        ):
+            return query_topk_local(
+                spark, handle, query, k=k, conjunctive=conjunctive,
+                with_url=with_url, stats=st_local, tiebreak=tiebreak,
+            )
         mode = "wand"
     try:
         # driver-side stats lookup via pyarrow (no Spark job); the dict is
@@ -485,32 +656,24 @@ def query_topk(
         st = _local_term_stats(handle, terms)
     except Exception:  # non-local filesystem → fall back to a Spark read
         st = term_stats(spark, handle, terms)
-    terms = [t for t in terms if t in st]  # zero-hit terms drop out
-    empty = spark.createDataFrame(
-        [],
-        schema=T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("url", T.StringType()),
-                T.StructField("score", T.DoubleType()),
-            ]
-        ),
-    )
-    if not terms or (conjunctive and len(terms) < len(parse_query(query))):
-        return empty.drop(*([] if with_url else ["url"]))
-    if doc_filter is not None and len(doc_filter) == 0:
-        return empty.drop(*([] if with_url else ["url"]))
+    live = [t for t in terms if t in st]  # zero-hit terms drop out
+    if (
+        not live
+        or (conjunctive and len(live) < len(terms))
+        or (doc_filter is not None and len(doc_filter) == 0)
+    ):
+        return _result_df(spark, [], [], [], with_url)
     k1, b = handle.stats["k1"], handle.stats["b"]
-    avgdl, n_docs = handle.stats["avgdl"], handle.stats["n_docs"]
-    blocks = _pruned_postings(spark, handle, terms)
+    avgdl = handle.stats["avgdl"]
 
     if mode == "brute":
+        blocks = _pruned_postings(spark, handle, live)
         scored = blocks.mapInPandas(_brute_scorer(st, k1, b, avgdl), SCORE_SCHEMA)
         agg = scored.groupBy("doc_id").agg(
             F.sum("contrib").alias("score"), F.count("*").alias("nt")
         )
         if conjunctive:
-            agg = agg.filter(F.col("nt") == len(terms))
+            agg = agg.filter(F.col("nt") == len(live))
         if tiebreak == "url":
             docs = _docs_df(spark, handle).select("doc_id", "url")
             agg = agg.join(docs, "doc_id")
@@ -519,184 +682,89 @@ def query_topk(
                 *(["doc_id", "url"] if with_url else ["doc_id"]),
                 F.col("score").cast("double"),
             ).orderBy(F.desc("score"), F.asc("url"))
-        topk = agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        rows = (
+            agg.orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(k)
+            .select("doc_id", F.col("score").cast("double"))
+            .collect()
+        )
+        top_ids = [int(r["doc_id"]) for r in rows]
+        top_scores = [float(r["score"]) for r in rows]
     elif mode == "wand":
-        # Query-time shard width adapts to the query's posting volume: the
-        # scorer is exact for ANY doc-range partitioning (it clips to its
-        # own range), so light queries run as one shard (one Python task, no
-        # per-group scheduling overhead) while stopword-grade queries fan out
-        # to up to n_doc_ranges shards (~TARGET postings each — seconds of
-        # vectorized kernel work per task at 10^12 docs, bounded memory).
-        range_size = handle.stats["range_size"]
-        n_ranges = handle.stats.get("n_doc_ranges", 32)
-        n_groups = _wand_n_groups(handle, st, terms, shard_target)
-        # ship the allowed-id array via a SparkContext broadcast (torrent,
-        # sent once per executor) instead of pickling up to ~32 MB into
-        # every task closure (r5 verdict "What's wrong #2"); tiny arrays
-        # stay in the closure — a broadcast's setup costs more than
-        # shipping a few hundred KB once
-        doc_filter_bc = None
-        if doc_filter is not None:
-            doc_filter_bc = (
-                spark.sparkContext.broadcast(doc_filter)
-                if doc_filter.nbytes > (1 << 20)
-                else doc_filter
-            )
-        width = range_size * (-(-n_ranges // n_groups))
-        if n_groups == 1:
-            # single shard ⇒ no co-location needed: fold the pruned scan into
-            # one task and score it there — one stage, no shuffle. The range
-            # is unbounded: doc ids may exceed range_size × n_ranges when the
-            # id buckets are skewed, and nothing may be clipped away here.
-            scorer = _wand_shard_scorer(
-                st, k1, b, avgdl, k, conjunctive, len(terms), 1 << 62,
-                allowed=doc_filter_bc,
+        # Query-time shard width adapts to the query's posting volume: light
+        # queries run as one shard on the driver, stopword-grade queries fan
+        # out to up to n_doc_ranges shards (~TARGET postings each — seconds
+        # of vectorized kernel work per task at 10^12 docs, bounded memory).
+        runner = ShardRunner(
+            spark, handle, handle.postings_path, POSTINGS_SCHEMA, live,
+            _wand_n_groups(handle, st, live, shard_target),
+        )
+        # ship a large allowed-id array via a SparkContext broadcast
+        # (torrent, sent once per executor) instead of pickling up to ~32 MB
+        # into every task closure (r5 verdict "What's wrong #2"); tiny
+        # arrays stay in the closure — a broadcast's setup costs more than
+        # shipping a few hundred KB once — and the driver run needs neither
+        allowed = doc_filter
+        if (
+            doc_filter is not None
+            and runner.blocks is None
+            and doc_filter.nbytes > (1 << 20)
+        ):
+            allowed = spark.sparkContext.broadcast(doc_filter)
+
+        def scorer(floor: float | None = None):
+            return _wand_shard_scorer(
+                st, k1, b, avgdl, k, conjunctive, len(live), runner.width,
+                floor=floor, allowed=allowed,
             )
 
-            def _single(batches):
-                pdfs = [p for p in batches if len(p)]
-                if pdfs:
-                    yield scorer(pd.concat(pdfs, ignore_index=True))
-
-            local = (
-                blocks.withColumn("shard", F.lit(0).cast("long"))
-                .coalesce(1)
-                .mapInPandas(_single, TOPK_SCHEMA)
-            )
-        else:
-            scorer = _wand_shard_scorer(
-                st, k1, b, avgdl, k, conjunctive, len(terms), width,
-                allowed=doc_filter_bc,
-            )
-            # a block overlapping multiple doc-range shards is replicated to
-            # each; the shuffle payload is ≤ blocks × spanned shards rows
-            shard = blocks.withColumn(
-                "shard",
-                F.explode(
-                    F.sequence(
-                        (F.col("first_doc_id") / width).cast("long"),
-                        (F.col("last_doc_id") / width).cast("long"),
-                    )
-                ),
-            )
-            local = shard.groupBy("shard").applyInPandas(scorer, TOPK_SCHEMA)
+        cand = runner.collect(scorer(), TOPK_SCHEMA)
+        ids = cand["doc_id"].to_numpy(np.int64)
+        scores = cand["score"].to_numpy(np.float64)
         if tiebreak == "url":
-            # ≤ shards·k candidate rows: collect, resolve urls driver-side,
-            # re-sort by the oracle tie-break. EXACT: every doc scoring
-            # strictly above the global kth candidate score s_k is provably
-            # in the candidate set (a shard that dropped it would have had
-            # k better rows, pushing s_k above that doc's score). Only docs
-            # TYING s_k can be missing — detectable as a shard that
-            # returned exactly k rows with min score == s_k. When detected,
-            # one floor-mode rescan (score >= s_k, block-max pruned)
-            # fetches the complete tie group before the url sort.
-            cand_rows = local.collect()
-            cand = {int(r["doc_id"]): float(r["score"]) for r in cand_rows}
-            if len(cand) >= k > 0:
-                s_k = sorted(cand.values(), reverse=True)[k - 1]
+            # <= shards·k candidate rows: resolve urls driver-side, re-sort
+            # by the oracle tie-break. EXACT: every doc scoring strictly
+            # above the global kth candidate score s_k is provably in the
+            # candidate set (a shard that dropped it would have had k better
+            # rows, pushing s_k above that doc's score). Only docs TYING s_k
+            # can be missing, and only if their home shard's heap actually
+            # DROPPED a candidate scoring exactly s_k (every dropped score
+            # is <= the shard's final min, so dropped_max == s_k iff a true
+            # tie was lost). Then one floor-mode rescan (score >= s_k,
+            # block-max pruned) fetches the complete tie group.
+            by_doc = dict(zip(ids.tolist(), scores.tolist()))
+            if len(by_doc) >= k > 0:
+                s_k = sorted(by_doc.values(), reverse=True)[k - 1]
                 per_shard: dict[int, list[float]] = {}
                 per_shard_dm: dict[int, float] = {}
-                for r in cand_rows:
-                    sh = 0 if n_groups == 1 else int(r["doc_id"]) // width
-                    per_shard.setdefault(sh, []).append(float(r["score"]))
-                    dm = float(r["dropped_max"])
+                for d, s, dm in zip(ids.tolist(), scores.tolist(),
+                                    cand["dropped_max"].tolist()):
+                    sh = d // runner.width
+                    per_shard.setdefault(sh, []).append(s)
                     if dm > per_shard_dm.get(sh, float("-inf")):
                         per_shard_dm[sh] = dm
-                # a doc tying s_k can only be missing if its home shard's
-                # heap actually DROPPED a candidate scoring exactly s_k
-                # (every dropped score is <= the shard's final min, so
-                # dropped_max == s_k iff a true tie was lost). Without a
-                # recorded drop at s_k the candidate set provably contains
-                # the whole tie group and the rescan job is skipped — the
-                # previous shape-only test (k rows with min == s_k) fired
-                # on EVERY single-shard query and doubled its latency.
                 if any(len(v) == k and min(v) == s_k
-                       and per_shard_dm.get(sh2, float("-inf")) == s_k
-                       for sh2, v in per_shard.items()):
-                    fscorer = _wand_shard_scorer(
-                        st, k1, b, avgdl, k, conjunctive, len(terms),
-                        (1 << 62) if n_groups == 1 else width, floor=s_k,
-                        allowed=doc_filter_bc,
-                    )
-                    if n_groups == 1:
-                        def _single_f(batches):
-                            pdfs = [p for p in batches if len(p)]
-                            if pdfs:
-                                yield fscorer(
-                                    pd.concat(pdfs, ignore_index=True)
-                                )
-
-                        extra = (
-                            blocks.withColumn(
-                                "shard", F.lit(0).cast("long")
-                            )
-                            .coalesce(1)
-                            .mapInPandas(_single_f, TOPK_SCHEMA)
-                            .collect()
-                        )
-                    else:
-                        extra = (
-                            shard.groupBy("shard")
-                            .applyInPandas(fscorer, TOPK_SCHEMA)
-                            .collect()
-                        )
-                    for r in extra:
-                        cand.setdefault(int(r["doc_id"]), float(r["score"]))
-            url_map = _resolve_urls(spark, handle, list(cand))
-            ranked = sorted(
-                ((s, url_map.get(d), d) for d, s in cand.items()),
-                key=lambda x: (-x[0], x[1]),
-            )[:k]
-            pdf = pd.DataFrame(
-                {
-                    "doc_id": pd.Series([d for _, _, d in ranked], dtype="int64"),
-                    "url": [u for _, u, _ in ranked],
-                    "score": pd.Series([s for s, _, _ in ranked], dtype="float64"),
-                }
+                       and per_shard_dm.get(sh, float("-inf")) == s_k
+                       for sh, v in per_shard.items()):
+                    extra = runner.collect(scorer(floor=s_k), TOPK_SCHEMA)
+                    for d, s in zip(extra["doc_id"].tolist(),
+                                    extra["score"].tolist()):
+                        by_doc.setdefault(int(d), float(s))
+            top = _url_ranked_topk(
+                spark, handle, list(by_doc), list(by_doc.values()), k
             )
-            df = spark.createDataFrame(
-                pdf,
-                T.StructType(
-                    [
-                        T.StructField("doc_id", T.LongType()),
-                        T.StructField("url", T.StringType()),
-                        T.StructField("score", T.DoubleType()),
-                    ]
-                ),
-            )
-            return df if with_url else df.drop("url")
-        topk = (
-            local.orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-            .select("doc_id", "score")
-        )
+            return _result_df(spark, *top, with_url=with_url)
+        order = np.lexsort((ids, -scores))[:k]
+        top_ids, top_scores = ids[order].tolist(), scores[order].tolist()
     else:
         raise ValueError(f"unknown mode {mode!r}")
 
-    # Materialize the ≤k result now (one Spark job) and resolve urls with a
-    # driver-side pyarrow lookup — avoids a second job scanning the docs
-    # table per query. Row order (score desc, doc_id asc) is preserved.
-    rows = topk.select("doc_id", F.col("score").cast("double")).collect()
-    top_ids = [int(r["doc_id"]) for r in rows]
-    urls: dict[int, str] = {}
-    if with_url and top_ids:
-        urls = _resolve_urls(spark, handle, top_ids)
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("url", T.StringType()),
-            T.StructField("score", T.DoubleType()),
-        ]
+    # ≤k rows are on the driver now: resolve urls with a driver-side pyarrow
+    # lookup — no second job scanning the docs table per query
+    urls = _resolve_urls(spark, handle, top_ids) if with_url else {}
+    return _result_df(
+        spark, top_ids, [urls.get(d) for d in top_ids], top_scores, with_url
     )
-    pdf = pd.DataFrame(
-        {
-            "doc_id": pd.Series(top_ids, dtype="int64"),
-            "url": [urls.get(d) for d in top_ids],
-            "score": pd.Series([float(r["score"]) for r in rows], dtype="float64"),
-        }
-    )
-    df = spark.createDataFrame(pdf, out_schema)
-    return df if with_url else df.drop("url")
 
 
 # ---------------------------------------------------------------------------
@@ -713,14 +781,22 @@ def query_topk(
 LOCAL_MAX_POSTINGS = 500_000
 
 
+def _fits_driver(st: dict, terms: list[str]) -> bool:
+    """The auto-mode crossover: the terms' postings are few enough to
+    score on the driver. Shared by query_topk(mode="auto") and the phrase
+    and positional candidate scorers."""
+    return sum(st[t]["df"] for t in terms if t in st) <= LOCAL_MAX_POSTINGS
+
+
 def _wand_n_groups(
     handle: IndexHandle, st: dict, terms: list[str],
     shard_target: int | None = None,
 ) -> int:
     """The ONE (total_df, n_doc_ranges) → shard-count formula, shared by
-    query_topk's fan-out decision and wand_shard_count's report so the
-    two can never drift (ADVICE r3). Terms absent from the stats table
-    contribute no postings."""
+    query_topk's fan-out decision, the positional phrase match and
+    wand_shard_count's report so they can never drift (ADVICE r3). Terms
+    absent from the stats table contribute no postings. 1 means the
+    ShardRunner scores the query on the driver."""
     tgt = shard_target or WAND_SHARD_TARGET
     total_df = sum(st[t]["df"] for t in terms if t in st)
     n_ranges = handle.stats.get("n_doc_ranges", 32)
@@ -731,8 +807,8 @@ def wand_shard_count(
     handle: IndexHandle, query: str, shard_target: int | None = None
 ) -> int:
     """How many doc-range shards the adaptive WAND path fans this query out
-    to (1 = single shuffle-free task). Exposed so the bench can report the
-    salted-shard fan-out per query per round (BENCH_r{N}.json)."""
+    to (1 = one shard, scored on the driver). Exposed so the bench can
+    report the salted-shard fan-out per query per round (BENCH_r{N}.json)."""
     terms = [t for t in parse_query(query)]
     return _wand_n_groups(
         handle, _local_term_stats(handle, terms), terms, shard_target
@@ -740,7 +816,7 @@ def wand_shard_count(
 
 
 def _local_term_stats(handle: IndexHandle, terms: list[str]) -> dict:
-    dset = _pa_dataset(handle, "_terms_ds", handle.terms_path)
+    dset = _pa_dataset(handle, handle.terms_path)
     tbl = dset.to_table(
         columns=["term", "df", "cf"], filter=_pa_field("term").isin(terms)
     )
@@ -762,23 +838,15 @@ def local_scored_arrays(
     decode, one np.add.at aggregation. Returns (doc_ids, scores) after the
     optional conjunctive mask; empty arrays when nothing matches. Fixed
     term order for float-sum determinism (golden parity)."""
-    import pyarrow.dataset as ds
-
     k1, b = handle.stats["k1"], handle.stats["b"]
     avgdl = handle.stats["avgdl"]
     empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
     if not terms:
         return empty
-    buckets = sorted(
-        {zlib.crc32(t.encode()) % handle.stats["n_term_buckets"] for t in terms}
-    )
-    dset = _pa_dataset(
-        handle, "_postings_ds", handle.postings_path, partitioning="hive"
-    )
-    tbl = dset.to_table(
-        columns=["term", "n", "codec_ids", "ids_enc", "codec_tfs", "tfs_enc",
-                 "codec_dls", "dls_enc"],
-        filter=ds.field("bucket").isin(buckets) & ds.field("term").isin(terms),
+    tbl = _local_blocks(
+        handle, handle.postings_path, terms,
+        ["term", "n", "codec_ids", "ids_enc", "codec_tfs", "tfs_enc",
+         "codec_dls", "dls_enc"],
     )
     ids_all, contrib_all = [], []
     cols = {c: tbl[c].to_pylist() for c in tbl.column_names}
@@ -831,68 +899,21 @@ def query_topk_local(
     stats: dict | None = None,
     tiebreak: str = "doc_id",
 ):
-    import pyarrow.dataset as ds
-
     terms = parse_query(query)
     st = stats if stats is not None else _local_term_stats(handle, terms)
     all_terms = terms
     terms = [t for t in terms if t in st]
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("url", T.StringType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-    empty = spark.createDataFrame([], out_schema)
     if not terms or (conjunctive and len(terms) < len(all_terms)):
-        return empty.drop(*([] if with_url else ["url"]))
+        return _result_df(spark, [], [], [], with_url)
     uniq, scores = local_scored_arrays(handle, terms, st, conjunctive)
-    if len(uniq) == 0:
-        return empty.drop(*([] if with_url else ["url"]))
     if tiebreak == "url":
         # oracle tie-break, EXACT: all matching docs' scores are in memory
-        # here, so take every doc scoring above the kth score plus the
-        # ENTIRE kth-score tie group (ties are exact float equalities — all
-        # scores come from the same kernel), resolve urls for just that
-        # set, re-sort by (score desc, url). No heuristic margin.
-        if len(scores) > k:
-            s_k = -np.partition(-scores, k - 1)[k - 1]
-            sel = scores >= s_k
-            cand_ids, cand_scores = uniq[sel], scores[sel]
-        else:
-            cand_ids, cand_scores = uniq, scores
-        dd = _pa_dataset(handle, "_docs_ds", handle.docs_path)
-        dt = dd.to_table(
-            columns=["doc_id", "url"],
-            filter=ds.field("doc_id").isin([int(x) for x in cand_ids]),
-        )
-        urls = dict(zip(dt["doc_id"].to_pylist(), dt["url"].to_pylist()))
-        ranked = sorted(
-            zip(cand_scores.tolist(), [urls.get(int(d)) for d in cand_ids],
-                cand_ids.tolist()),
-            key=lambda x: (-x[0], x[1]),
-        )[:k]
-        top_ids = np.asarray([d for _, _, d in ranked], dtype=np.int64)
-        top_scores = np.asarray([s for s, _, _ in ranked], dtype=np.float64)
-    else:
-        order2 = np.lexsort((uniq, -scores))[:k]
-        top_ids, top_scores = uniq[order2], scores[order2]
-    urls = {}
-    if with_url:
-        dd = _pa_dataset(handle, "_docs_ds", handle.docs_path)
-        dt = dd.to_table(
-            columns=["doc_id", "url"],
-            filter=ds.field("doc_id").isin([int(x) for x in top_ids]),
-        )
-        urls = dict(zip(dt["doc_id"].to_pylist(), dt["url"].to_pylist()))
-    pdf = pd.DataFrame(
-        {
-            "doc_id": top_ids.astype(np.int64),
-            "url": [urls.get(int(d)) for d in top_ids],
-            "score": top_scores.astype(np.float64),
-        }
+        # here, so the url sort sees the whole kth-score tie group
+        top = _url_ranked_topk(spark, handle, uniq, scores, k)
+        return _result_df(spark, *top, with_url=with_url)
+    order = np.lexsort((uniq, -scores))[:k]
+    top_ids, top_scores = uniq[order].tolist(), scores[order].tolist()
+    urls = _resolve_urls(spark, handle, top_ids) if with_url else {}
+    return _result_df(
+        spark, top_ids, [urls.get(d) for d in top_ids], top_scores, with_url
     )
-    # pandas→Arrow createDataFrame is ~10x cheaper than the row-list path
-    df = spark.createDataFrame(pdf, out_schema)
-    return df if with_url else df.drop("url")

@@ -5,6 +5,7 @@ input partitioning, and the no-corpus-access plan property."""
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import random
 import tempfile
@@ -28,13 +29,23 @@ def _wp_rows():
     ]
 
 
-@pytest.fixture(scope="module")
-def pos_index(spark, index_cfg):
+def _tie_rows():
+    """_wp_rows plus duplicate-text docs: "data table" then has a five-way
+    exact score tie (doc 6 and the four copies, all dl 3, tf 1) below the
+    top hits, so a top-k cut can straddle the tie group."""
+    ts = datetime.datetime(2024, 1, 1)
+    return _wp_rows() + [
+        (f"https://t.example.com/dup/{i}", ts, None, "data table omega", "en")
+        for i in range(4)
+    ]
+
+
+def _build(spark, index_cfg, rows):
     from engine.build import build_index
     from engine.positional import build_positions
 
     wp = spark.createDataFrame(
-        _wp_rows(),
+        rows,
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
     h = build_index(spark, wp, tempfile.mkdtemp(prefix="idx_pos_"), index_cfg)
@@ -42,18 +53,80 @@ def pos_index(spark, index_cfg):
     return h, wp, pos_dir
 
 
-def test_positional_rank_identical_to_verification(spark, pos_index):
+@pytest.fixture(scope="module")
+def pos_index(spark, index_cfg):
+    return _build(spark, index_cfg, _wp_rows())
+
+
+@pytest.fixture(scope="module")
+def tie_index(spark, index_cfg):
+    return _build(spark, index_cfg, _tie_rows())
+
+
+def _ranked(df):
+    return [(r["url"], round(r["score"], 9)) for r in df.collect()]
+
+
+@contextlib.contextmanager
+def _positions_unreadable(pos_dir):
+    """The pyarrow read of the position blocks raises, as on a store
+    pyarrow cannot read: the shard runner falls back to applyInPandas."""
+    import engine.query
+
+    real = engine.query._local_blocks
+
+    def read(handle, path, terms, columns):
+        if path == pos_dir:
+            raise OSError("store not readable by pyarrow")
+        return real(handle, path, terms, columns)
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(engine.query, "_local_blocks", read)
+        yield
+
+
+# a repeated term, an absent term and a pair that co-occurs in doc 0 but
+# never adjacently ("alpha table"), besides plain and reversed pairs
+_PHRASES = (
+    "data table", "table data", "data x table", "data table data", "alpha",
+    "data zzznope", "alpha table",
+)
+
+
+def test_positional_rank_identical_to_verification(
+    spark, pos_index, tie_index, spark_jobs
+):
+    """Positional phrase top-k equals the verification path on all three
+    shard-runner executions: one shard on the driver (zero Spark jobs), the
+    applyInPandas fallback and several shards. Covers a url tie-break
+    across the kth score (tie_index at k=2)."""
+    import engine.query
     from engine.phrase import phrase_topk
     from engine.positional import phrase_topk_positional
 
-    h, wp, pos_dir = pos_index
-    for phrase in ("data table", "table data", "data x table", "alpha"):
-        ver = [(r["url"], round(r["score"], 9))
-               for r in phrase_topk(spark, h, wp, phrase, k=10).collect()]
-        pos = [(r["url"], round(r["score"], 9))
-               for r in phrase_topk_positional(
-                   spark, h, pos_dir, phrase, k=10).collect()]
-        assert pos == ver, phrase
+    for (h, wp, pos_dir), k in ((pos_index, 10), (tie_index, 2)):
+        def run():
+            return _ranked(
+                phrase_topk_positional(spark, h, pos_dir, phrase, k))
+
+        for phrase in _PHRASES:
+            driver, jobs = spark_jobs(run)
+            assert jobs == 0, phrase
+            with _positions_unreadable(pos_dir):
+                fallback, fb_jobs = spark_jobs(run)
+            with pytest.MonkeyPatch.context() as m:
+                m.setattr(engine.query, "WAND_SHARD_TARGET", 1)
+                multi = run()
+            ver = _ranked(phrase_topk(spark, h, wp, phrase, k=k))
+            assert driver == fallback == multi == ver, phrase
+            # a match launches a job, unless no adjacency check is needed
+            assert (fb_jobs > 0) == (" " in phrase and "zzz" not in phrase)
+    # the tie fixture really straddles k: the top-2 cut keeps one of the
+    # five tied docs, the smallest url among them
+    h, _, pos_dir = tie_index
+    top = _ranked(phrase_topk_positional(spark, h, pos_dir, "data table", 6))
+    assert len({s for _, s in top[1:]}) == 1
+    assert top[1][0] == "https://t.example.com/doc/6"
 
 
 def test_positional_adjacency_semantics(spark, pos_index):
@@ -191,17 +264,55 @@ def test_positions_artifact_deterministic(spark, index_cfg):
     assert content_hash(d1) == content_hash(d2)
 
 
-def test_positional_plan_reads_only_positions(spark, pos_index):
-    """The phrase-match plan scans the positions artifact with term-bucket
-    partition pruning and never touches the corpus or the main postings."""
+def test_positional_plan_reads_only_positions(spark, pos_index, monkeypatch):
+    """The phrase match reads only the positions artifact, pruned to the
+    phrase's term buckets, and never the corpus or the main postings: the
+    fanned-out Spark plan scans positions alone, and a one-shard match,
+    which runs on the driver, reads positions blocks alone."""
+    import engine.query
     from engine.analyzer import tokenize
     from engine.positional import phrase_match_docs
 
     h, _, pos_dir = pos_index
     plan = phrase_match_docs(
-        spark, h, pos_dir, tokenize("data table")
+        spark, h, pos_dir, tokenize("data table"), shard_target=1
     )._jdf.queryExecution().executedPlan().toString()
     assert "positions" in plan
     # corpus (webpages) and main postings never appear in the scan set
     assert "text#" not in plan and "html#" not in plan
     assert "tfs_enc" not in plan
+
+    reads = []
+    real = engine.query._local_blocks
+
+    def spy(handle, path, terms, columns):
+        reads.append(path)
+        return real(handle, path, terms, columns)
+
+    monkeypatch.setattr(engine.query, "_local_blocks", spy)
+    phrase_match_docs(spark, h, pos_dir, tokenize("data table")).collect()
+    assert reads == [pos_dir]
+
+
+def test_positional_rebuild_in_place(spark, index_cfg, spark_jobs):
+    """build_positions into the same directory drops the handle's memoized
+    scans of it (pyarrow dataset and Spark scan): the driver run and the
+    applyInPandas fallback both read the new files after the rebuild."""
+    from engine.positional import build_positions, phrase_topk_positional
+
+    h, wp, pos_dir = _build(spark, index_cfg, _wp_rows())
+
+    def both():
+        def run():
+            return _ranked(
+                phrase_topk_positional(spark, h, pos_dir, "data table", 10))
+
+        driver, jobs = spark_jobs(run)
+        assert jobs == 0
+        with _positions_unreadable(pos_dir):
+            return driver, run()
+
+    before = both()
+    assert build_positions(spark, h, wp, pos_dir) == pos_dir
+    after = both()
+    assert before == after and before[0] == before[1] and len(before[0]) == 3

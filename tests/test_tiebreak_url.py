@@ -9,30 +9,10 @@ from __future__ import annotations
 
 import tempfile
 
-import pytest
-
 import engine.query as eq
 from engine.build import build_index
 from engine.config import IndexConfig
 from engine.query import query_topk
-
-
-@pytest.fixture(scope="module")
-def tied_index(spark):
-    # urls descend as doc order ascends: url rank is anti-correlated with
-    # insertion order, and doc_ids (partition-offset scheme) differ from
-    # url order too
-    rows = [
-        (f"https://site-{999 - i:03d}.example.com/tie", "tie breaker corpus")
-        for i in range(64)
-    ]
-    wp = spark.createDataFrame(rows, "url string, text string")
-    cfg = IndexConfig(
-        n_build_partitions=4, n_doc_ranges=4, min_hot_df=8, n_term_buckets=4
-    )
-    return build_index(
-        spark, wp, tempfile.mkdtemp(prefix="idx_ties_"), cfg
-    )
 
 
 def _urls(df):
